@@ -46,10 +46,10 @@ def run_standardize_job(
     may span other input directories). ``lon``/``lat`` ARE the clip
     extent (they can widen past the defaults, not just narrow).
 
-    Remote estates: ``input_glob`` may be a remote URI — listing goes
-    through Hadoop globStatus (driver-side) and executor decode reads
-    bytes via ``pyarrow.fs`` (s3/gs/hdfs where pyarrow supports the
-    scheme; see ``geotiff_datasource._read_bytes``). ``out_dir`` must be
+    Remote estates: ``input_glob`` may be a URI — the driver lists it
+    with ``sources.storage.hadoop_glob`` and executor decode reads the
+    bytes with ``sources.storage.read_bytes`` (pyarrow's filesystems:
+    s3/gs/hdfs where pyarrow supports the scheme). ``out_dir`` must be
     LOCAL/shared-posix — the geotiff writer refuses remote save paths
     (executor workers have no JVM gateway to the Hadoop FS for writes).
     The ``ledger_path`` is plain Spark parquet and may live anywhere.

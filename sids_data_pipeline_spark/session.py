@@ -17,6 +17,15 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
+# File listing: Spark flips to a DISTRIBUTED listing job above
+# spark.sql.sources.parallelPartitionDiscovery.threshold paths (default
+# 32). A listing job costs a full scheduler round trip (2-6 s measured
+# on a 4-core VM), and drop-folder streaming sources pay THREE per
+# micro-batch (source init, latestOffset, getBatch). Below ~10k paths the
+# driver stats the files faster on any filesystem (one object-store LIST
+# page is 1000 keys); above it the distributed path keeps its
+# large-estate win.
+LIST_PARALLEL_THRESHOLD = "10000"
 
 
 def get_spark(
@@ -39,18 +48,6 @@ def get_spark(
     - Arrow enabled for pandas UDFs and createDataFrame/toPandas.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 4))
-    # File listing (guide §6): Spark flips to a DISTRIBUTED listing job
-    # above spark.sql.sources.parallelPartitionDiscovery.threshold paths
-    # (default 32). A listing job costs a full scheduler round trip —
-    # measured 2-6 s each here, and drop-folder streaming sources pay
-    # THREE per micro-batch (source init, latestOffset, getBatch). Below
-    # ~10k paths the driver stats the files faster on any filesystem
-    # (one object-store LIST page is 1000 keys); above it the
-    # distributed path keeps its large-estate win, so deployments with
-    # million-file tables can lower this via env.
-    list_threshold = os.environ.get(
-        "SPARK_GRAFT_LIST_PARALLEL_THRESHOLD", "10000"
-    )
     builder = (
         SparkSession.builder.appName(app_name)
         .config("spark.sql.adaptive.enabled", "true")
@@ -78,7 +75,7 @@ def get_spark(
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config(
             "spark.sql.sources.parallelPartitionDiscovery.threshold",
-            list_threshold,
+            LIST_PARALLEL_THRESHOLD,
         )
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
@@ -114,7 +111,7 @@ def get_spark(
         # too, not just fresh builds (both are runtime-mutable)
         "spark.sql.parquet.filterPushdown": "true",
         "spark.sql.files.maxPartitionBytes": "134217728",
-        "spark.sql.sources.parallelPartitionDiscovery.threshold": list_threshold,
+        "spark.sql.sources.parallelPartitionDiscovery.threshold": LIST_PARALLEL_THRESHOLD,
         **(extra_conf or {}),
     }
     for k, v in runtime.items():

@@ -30,13 +30,19 @@ from __future__ import annotations
 import json
 import math
 import os
-import re as _re
 from typing import Iterable
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from sids_data_pipeline_spark.sources.storage import (
+    fs_exists,
+    fs_write_text,
+    glob_escape,
+    hadoop_glob,
+)
 
 MAX_ZOOM = 10  # reference tippecanoe -z10 (tiles.py:22-24)
 # tippecanoe's default --buffer=5 is 5/256 of the tile span; at the default
@@ -400,22 +406,10 @@ def read_tileset(spark: SparkSession, path: str) -> DataFrame:
 
 
 def _write_marker(spark: SparkSession, path: str, content: str) -> None:
-    """Write a small text marker through the Hadoop filesystem for
-    remote URIs (local open() would fail after the parquet write already
-    succeeded, leaving the P6 loop unable to close), plain open()
-    locally."""
-    if "://" in path:
-        jvm = spark._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path(path)
-        fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        out = fs.create(hpath, True)
-        try:
-            out.write(bytearray(content.encode("utf-8")))
-        finally:
-            out.close()
-    else:
-        with open(path, "w") as fh:
-            fh.write(content)
+    """Write a small text marker wherever the tileset's parquet landed
+    (a failed marker write after a good data write would leave the P6
+    loop unable to close)."""
+    fs_write_text(spark, path, content)
 
 
 def tileset_markers(out_dir: str) -> set[str]:
@@ -425,36 +419,15 @@ def tileset_markers(out_dir: str) -> set[str]:
     O(1) filesystem round-trips no matter how many pairs the estate
     holds (reference data.py:26-40 probes per pair because its shell
     loop is already per-pair; at 10⁵ pairs one listing wins)."""
-    from sids_data_pipeline_spark.sources.storage import hadoop_glob
-
-    if "://" in out_dir:
-        spark = SparkSession.getActiveSession()
-        if spark is None:
-            raise RuntimeError("tileset_markers(URI) needs an active SparkSession")
-        # Hadoop glob metachars in the literal prefix are escaped with
-        # backslash (the Hadoop GlobPattern convention)
-        prefix = _re.sub(r"([\[\]{}?*\\])", r"\\\1", out_dir)
-    else:
-        import glob as globmod
-
-        spark = None
-        prefix = globmod.escape(out_dir)
-    pattern = os.path.join(prefix, "*", "tiles", "_tileset_metadata.json")
-    paths = hadoop_glob(spark, pattern)
+    pattern = os.path.join(
+        glob_escape(None, out_dir), "*", "tiles", "_tileset_metadata.json"
+    )
     return {
-        os.path.basename(os.path.dirname(os.path.dirname(p))) for p in paths
+        os.path.basename(os.path.dirname(os.path.dirname(p)))
+        for p in hadoop_glob(None, pattern)
     }
 
 
 def tileset_complete(path: str) -> bool:
-    """P6 existence probe (reference data.py:33-35) — Hadoop FS for
-    remote URIs, os.path locally."""
-    marker = os.path.join(path, "_tileset_metadata.json")
-    if "://" in marker:
-        spark = SparkSession.getActiveSession()
-        if spark is None:
-            raise RuntimeError("tileset_complete(URI) needs an active SparkSession")
-        hpath = spark._jvm.org.apache.hadoop.fs.Path(marker)
-        fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        return fs.exists(hpath)
-    return os.path.exists(marker)
+    """P6 existence probe (reference data.py:33-35)."""
+    return fs_exists(None, os.path.join(path, "_tileset_metadata.json"))

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from sids_data_pipeline_spark.functions.geo import promote_to_multi
 from sids_data_pipeline_spark.schemas import ZONES
+from sids_data_pipeline_spark.sources.storage import local_path
 
 _GP_MAGIC = b"GP"
 
@@ -59,7 +60,7 @@ def make_gpb(wkb: bytes, srs_id: int = 4326) -> bytes:
 
 
 def list_feature_tables(path: str) -> list[str]:
-    con = sqlite3.connect(path)
+    con = sqlite3.connect(local_path(path))
     try:
         rows = con.execute(
             "SELECT table_name FROM gpkg_contents WHERE data_type = 'features'"
@@ -89,7 +90,7 @@ def ingest_geopackage(
     (ogr2ogr ``-t_srs`` parity); anything else raises. Silently
     ingesting projected meters as degrees is the classic wrong-answer
     class this guard exists for."""
-    con = sqlite3.connect(path)
+    con = sqlite3.connect(local_path(path))
     try:
         if table is None:
             tables = list_feature_tables(path)

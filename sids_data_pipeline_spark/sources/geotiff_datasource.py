@@ -25,7 +25,6 @@ standardization) as a declarative scan.
 
 from __future__ import annotations
 
-import glob as _glob
 import os
 from typing import Iterator, Sequence
 
@@ -38,45 +37,17 @@ from pyspark.sql.datasource import (
 )
 
 from sids_data_pipeline_spark.schemas import PIXELS
+from sids_data_pipeline_spark.sources.storage import (
+    hadoop_glob,
+    local_path,
+    read_bytes,
+)
 
 
 class _FilePartition(InputPartition):
     def __init__(self, path: str, band: int | None):
         self.path = path
         self.band = band
-
-
-def _read_bytes(path: str) -> bytes:
-    """Read a whole file from local disk or a remote URI.
-
-    ``read()`` runs in executor Python workers, which have NO JVM
-    gateway — the Hadoop FileSystem is unreachable there (the reason
-    :class:`GeoTiffWriter` refuses remote save paths). Remote READS go
-    through ``pyarrow.fs`` instead, which opens s3:// (and gs://,
-    hdfs:// where libhdfs is present) natively from Python; Hadoop's
-    s3a/s3n scheme aliases map to pyarrow's s3. Unsupported schemes
-    raise a clear error instead of executor-side FileNotFoundError.
-    """
-    if "://" not in path or path.startswith("file://"):
-        with open(path.removeprefix("file://"), "rb") as f:
-            return f.read()
-    uri = path
-    scheme, rest = uri.split("://", 1)
-    if scheme in ("s3a", "s3n"):
-        uri = f"s3://{rest}"
-    try:
-        from pyarrow import fs as pafs
-
-        filesystem, fs_path = pafs.FileSystem.from_uri(uri)
-    except Exception as ex:
-        raise NotImplementedError(
-            f"geotiff source: remote scheme {scheme!r} is not readable "
-            "from executor Python workers (no JVM gateway; pyarrow.fs "
-            f"rejected {uri!r}: {ex}) — copy to local/s3 storage or "
-            "ingest via binaryFile + ingest_geotiff instead"
-        ) from ex
-    with filesystem.open_input_stream(fs_path) as f:
-        return f.read()
 
 
 class GeoTiffReader(DataSourceReader):
@@ -98,23 +69,11 @@ class GeoTiffReader(DataSourceReader):
     def partitions(self) -> Sequence[InputPartition]:
         if self._files:
             paths = sorted(p for p in self._files.split(",") if p)
-        elif "://" in self._path:
-            # planning runs on the DRIVER, where the JVM gateway exists:
-            # remote globs expand in one Hadoop globStatus round-trip
-            # (executor-side decode then reads bytes via pyarrow.fs)
-            from pyspark.sql import SparkSession
-
-            from sids_data_pipeline_spark.sources.storage import hadoop_glob
-
-            spark = SparkSession.getActiveSession()
-            if spark is None:
-                raise RuntimeError(
-                    "geotiff source: remote glob planning needs an active "
-                    "SparkSession"
-                )
-            paths = hadoop_glob(spark, self._path)
         else:
-            paths = sorted(_glob.glob(self._path))
+            # planning runs in a planner worker without a JVM gateway:
+            # local and file: globs list here; remote estates hand their
+            # driver-side hadoop_glob listing over through "files"
+            paths = hadoop_glob(None, self._path)
         if not paths:
             raise FileNotFoundError(f"geotiff: no files match {self._path!r}")
         return [_FilePartition(p, self._band) for p in paths]
@@ -126,7 +85,7 @@ class GeoTiffReader(DataSourceReader):
         from sids_data_pipeline_spark.sources.geotiff import decode_geotiff_bands
 
         bands3, (ox, oy, sx, sy), nodata = decode_geotiff_bands(
-            _read_bytes(partition.path)
+            read_bytes(partition.path)
         )
         nb, h, w = bands3.shape
         band = partition.band
@@ -197,18 +156,16 @@ class GeoTiffWriter(DataSourceWriter):
         self._path = options.get("path")
         if not self._path:
             raise ValueError("geotiff writer requires a save(path) directory")
-        if "://" in self._path:
-            # write() runs in executor Python workers, which have no JVM
-            # gateway — files written with os/open there would land on
-            # executor-local disks and silently vanish from a remote URI
-            # estate. Refuse explicitly; remote estates should export via
-            # geotiff.export_geotiff + storage.fs_write_bytes (driver-
-            # coordinated Hadoop FS), mirroring the repo's other sinks.
+        # write() runs in executor Python workers with plain os/open: a
+        # remote URI would land on executor-local disks and silently
+        # vanish from the estate, so it is refused up front
+        try:
+            self._path = local_path(self._path)
+        except ValueError as ex:
             raise ValueError(
-                "geotiff writer writes executor-local files; remote URIs "
-                f"({self._path!r}) are not supported — use "
-                "export_geotiff() + fs_write_bytes() instead"
-            )
+                f"geotiff writer writes executor-local files: {ex} — use "
+                "export_geotiff() + sources.storage.fs_write_bytes() instead"
+            ) from ex
         self._nodata = float(options.get("nodata", -9999.0))
         self._compress = options.get("compress")
         self._tile = int(options["tile"]) if "tile" in options else None

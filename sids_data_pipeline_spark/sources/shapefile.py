@@ -57,6 +57,7 @@ from sids_data_pipeline_spark.functions.geo import (
     ring_signed_area,
 )
 from sids_data_pipeline_spark.schemas import ZONES
+from sids_data_pipeline_spark.sources.storage import exists, read_bytes
 
 # shape-type constants (ESRI TD page 4); Z/M variants share the XY prefix
 SHP_NULL = 0
@@ -339,28 +340,6 @@ def _sidecar(path: str, ext: str) -> str:
     return root + ext
 
 
-def _read_bytes(path: str) -> bytes:
-    """Local or remote (URI) read — same pyarrow-fs contract as the
-    GeoTIFF source: unknown schemes are refused loudly, never guessed.
-    The reference fetches shapefile sidecar sets from blob storage
-    (pipeline/processing/download.py:14-17); this is that fetch."""
-    from sids_data_pipeline_spark.sources.geotiff_datasource import (
-        _read_bytes as _rb,
-    )
-
-    return _rb(path)
-
-
-def _exists(path: str) -> bool:
-    if "://" not in path or path.startswith("file://"):
-        return os.path.exists(path.removeprefix("file://"))
-    try:
-        _read_bytes(path)
-        return True
-    except (FileNotFoundError, OSError):
-        return False
-
-
 # --- public read API -----------------------------------------------------------
 
 
@@ -397,10 +376,10 @@ def read_shapefile(path: str, encoding: str | None = None) -> pd.DataFrame:
     dbf_path = _sidecar(path, ".dbf")
     cpg_path = _sidecar(path, ".cpg")
     geoms, names, rows, deleted = _shp_parts(
-        _read_bytes(path),
-        _read_bytes(dbf_path) if _exists(dbf_path) else None,
-        _read_bytes(cpg_path).decode("ascii", errors="replace")
-        if encoding is None and _exists(cpg_path)
+        read_bytes(path),
+        read_bytes(dbf_path) if exists(dbf_path) else None,
+        read_bytes(cpg_path).decode("ascii", errors="replace")
+        if encoding is None and exists(cpg_path)
         else None,
         encoding,
     )
@@ -469,14 +448,14 @@ def resolve_src_epsg(
     non-4326 .prj without ``reproject``, and an unregistered projection
     all refuse loudly; the engine never guesses datums."""
     prj_path = _sidecar(path, ".prj")
-    if not _exists(prj_path) and not assume_wgs84:
+    if not exists(prj_path) and not assume_wgs84:
         raise ValueError(
             f"{path}: no .prj sidecar — the engine does not guess datums; "
             "pass assume_wgs84=True to declare the coordinates WGS-84, or "
             "supply the .prj"
         )
-    if _exists(prj_path):
-        wkt = _read_bytes(prj_path).decode("ascii", errors="replace")
+    if exists(prj_path):
+        wkt = read_bytes(prj_path).decode("ascii", errors="replace")
         epsg = prj_to_epsg(wkt)
         if epsg != 4326 and reproject and epsg is not None:
             from sids_data_pipeline_spark.functions.crs import (
@@ -529,15 +508,15 @@ def ingest_shapefile(
     :func:`resolve_src_epsg` but parses executor-side."""
     src_epsg = resolve_src_epsg(path, reproject=reproject, assume_wgs84=assume_wgs84)
     dbf_path = _sidecar(path, ".dbf")
-    dbf_bytes = _read_bytes(dbf_path) if _exists(dbf_path) else None
+    dbf_bytes = read_bytes(dbf_path) if exists(dbf_path) else None
     cpg_path = _sidecar(path, ".cpg")
     cpg_text = (
-        _read_bytes(cpg_path).decode("ascii", errors="replace")
-        if _exists(cpg_path)
+        read_bytes(cpg_path).decode("ascii", errors="replace")
+        if exists(cpg_path)
         else None
     )
     out = zone_records(
-        _read_bytes(path), dbf_bytes, cpg_text, vector_id,
+        read_bytes(path), dbf_bytes, cpg_text, vector_id,
         name_col=name_col, encoding=encoding,
     )
     zones = spark.createDataFrame(out, ZONES).coalesce(1)

@@ -853,7 +853,7 @@ def streaming_vector_ingest(
     byte-level core as the batch path (sources/shapefile.zone_records —
     winding-rule grouping, .dbf attributes, polygon gate) inside
     mapInPandas, fetching the small .dbf/.cpg sidecars per-task through
-    the shared pyarrow-fs path. Only metadata stays on the driver: the
+    sources.storage.read_bytes. Only metadata stays on the driver: the
     sidecar-race guard, the .prj CRS gate (resolve_src_epsg — the same
     gate the batch ingest uses, so the two paths cannot drift), and the
     per-file vector_id mapping. A parcel-scale multi-GB .shp therefore
@@ -884,10 +884,10 @@ def streaming_vector_ingest(
 
     def process(batch: DataFrame, batch_id: int) -> None:
         from sids_data_pipeline_spark.sources.shapefile import (
-            _exists,
             _sidecar,
             resolve_src_epsg,
         )
+        from sids_data_pipeline_spark.sources.storage import exists
 
         bspark = batch.sparkSession
         paths = [r.path for r in batch.select("path").distinct().collect()]
@@ -916,13 +916,12 @@ def streaming_vector_ingest(
         parts = []
         shp_meta: dict[str, tuple[str, int]] = {}  # path -> (vector_id, epsg)
         for path in sorted(paths):
-            local = path.removeprefix("file:")
-            stem = os.path.splitext(os.path.basename(local))[0]
-            ext = os.path.splitext(local)[1].lower()
+            stem = os.path.splitext(os.path.basename(path))[0]
+            ext = os.path.splitext(path)[1].lower()
             if ext == ".gpkg":
                 parts.append(
                     ingest_geopackage(
-                        bspark, local, vector_id=stem, reproject=reproject
+                        bspark, path, vector_id=stem, reproject=reproject
                     )
                 )
             elif ext == ".shp":
@@ -938,7 +937,7 @@ def streaming_vector_ingest(
                 # .shp last, after its sidecars — then this is a no-op.)
                 missing = [
                     e for e in (".prj", ".dbf")
-                    if not _exists(_sidecar(local, e))
+                    if not exists(_sidecar(path, e))
                 ]
                 if missing:
                     raise ValueError(
@@ -948,7 +947,7 @@ def streaming_vector_ingest(
                         "last, after its sidecars"
                     )
                 shp_meta[path] = (
-                    stem, resolve_src_epsg(local, reproject=reproject)
+                    stem, resolve_src_epsg(path, reproject=reproject)
                 )
             elif ext in (".shx", ".dbf", ".prj", ".cpg"):
                 continue  # sidecars ride along with their .shp
@@ -960,18 +959,19 @@ def streaming_vector_ingest(
 
             def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
                 from sids_data_pipeline_spark.sources.shapefile import (
-                    _exists as ex,
-                    _read_bytes as rb,
                     _sidecar as sc,
                     zone_records,
+                )
+                from sids_data_pipeline_spark.sources.storage import (
+                    exists as ex,
+                    read_bytes as rb,
                 )
 
                 for pdf in batches:
                     for path, content in zip(pdf["path"], pdf["content"]):
                         vector_id, _epsg = meta[path]
-                        loc = path.removeprefix("file:")
-                        dbf = sc(loc, ".dbf")
-                        cpg = sc(loc, ".cpg")
+                        dbf = sc(path, ".dbf")
+                        cpg = sc(path, ".cpg")
                         rec = zone_records(
                             bytes(content),
                             rb(dbf) if ex(dbf) else None,

@@ -267,8 +267,9 @@ def test_canonicalize_is_idempotent():
 
 
 def test_ingest_via_file_uri(spark, tmp_path):
-    """file:// URIs ride the same pyarrow-fs path as remote schemes —
-    the reference's blob-storage sidecar fetch shape."""
+    """file:// URIs resolve to the local file through the same storage
+    helpers that fetch remote sidecar sets — the reference's
+    blob-storage sidecar fetch shape."""
     path = str(tmp_path / "zones.shp")
     write_shapefile(_fixture_records(), path)
     zones = ingest_shapefile(spark, "file://" + path, vector_id="uri")

@@ -69,7 +69,7 @@ def test_rejects_corrupt_files(spark, tmp_path):
 
 def test_write_rejects_unknown_remote_scheme(spark, tmp_path):
     """An unsupported remote scheme must fail LOUDLY executor-side (the
-    pyarrow.fs fallback raises NotImplementedError), never write to an
+    executor pyarrow helper refuses it by name), never write to an
     executor-local path that silently vanishes from the URI estate."""
     df = _packed(spark, [(1, 0, [1, 2, 3])])
     with pytest.raises(Exception, match="scheme|writable"):
